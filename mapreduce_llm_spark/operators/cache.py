@@ -68,8 +68,13 @@ def split_cached(
     """Partition chunks into (hits-with-result, misses) by cache_key.
 
     Anti-join for misses, inner join for hits; the cache side is tiny
-    relative to the corpus, so Catalyst broadcasts it.
+    relative to the corpus, so Catalyst broadcasts it. Misses come back
+    without ``cache_key``: the key is a pure function of the chunk text,
+    so a caller recomputes it JVM-side after the LLM call (``cache_key_col``)
+    instead of shipping it through the Python workers and back.
     """
     hits = keyed_chunks.join(F.broadcast(cache), "cache_key", "inner")
-    misses = keyed_chunks.join(F.broadcast(cache), "cache_key", "left_anti")
+    misses = keyed_chunks.join(F.broadcast(cache), "cache_key", "left_anti").drop(
+        "cache_key"
+    )
     return hits, misses

@@ -10,24 +10,38 @@ Reference behavior being re-expressed (not ported):
 - the client is injectable so tests run a deterministic fake
   (reference internal/openai/chat.go:13-16, mapreduce_test.go:17-54).
 
-Spark shape: ``mapInPandas`` over the chunk table. Parallelism is the
-partition count — bounded and tunable via repartition(n), a deliberate
-improvement over the reference's unbounded goroutine-per-chunk fan-out
-(reference internal/cli/mapreduce.go:93-122). Clients must be small and
-picklable; they are constructed once per partition, not per row.
+Spark shape: ``mapInPandas`` over the chunk table. Each task sends the
+chunks of every Arrow batch through a thread pool, so at most
+``concurrency`` calls per task are in flight at once (default
+``DEFAULT_CONCURRENCY``); tasks run in parallel on top of that. The
+bound is a deliberate improvement over the reference's unbounded
+goroutine-per-chunk fan-out (reference internal/cli/mapreduce.go:93-122):
+a provider sees at most ``concurrency`` × running tasks connections.
+Nothing is repartitioned, so a one-document input still runs in one
+task. Clients must be small and picklable: each task unpickles one
+copy, and its threads share it, so ``generate`` must be thread-safe.
 """
 
 from __future__ import annotations
 
 import re
+import threading
 from collections.abc import Iterator
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from typing import Protocol
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StringType, StructField, StructType
 
 RETURN_LINES_SUFFIX = "\nReturn the lines that you want to keep."
+
+# Calls in flight per task. Modest on purpose: a provider (or a local
+# server with a small listen backlog) resets connections when one
+# executor opens dozens at once, and a reset call cannot be retried
+# safely because the provider may already have billed it.
+DEFAULT_CONCURRENCY = 8
 
 
 class ChatClient(Protocol):
@@ -110,36 +124,55 @@ class OpenAICompatClient:
         return content
 
 
-RESULT_SCHEMA = "doc_id long, chunk_id long, chunk_text string, result string"
+def _generate_all(
+    client: ChatClient, system: str, texts: list[str], concurrency: int
+) -> list[str]:
+    """``client.generate(system, text)`` for every text, at most
+    ``concurrency`` at once; results in input order.
+
+    The first failure propagates, and calls that have not started are
+    cancelled so a failing job stops making billed calls (calls already
+    running finish first)."""
+    if not texts:
+        return []
+    with ThreadPoolExecutor(max_workers=min(concurrency, len(texts))) as pool:
+        futures = [pool.submit(client.generate, system, text) for text in texts]
+        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        if pending:  # a call failed before the rest finished
+            pool.shutdown(cancel_futures=True)
+            first = next(f for f in futures if f in done and f.exception() is not None)
+            raise first.exception()
+        return [f.result() for f in futures]
 
 
 def llm_map(
     chunks: DataFrame,
     prompt: str,
     client: ChatClient,
-    concurrency: int | None = None,
+    concurrency: int = DEFAULT_CONCURRENCY,
 ) -> DataFrame:
-    """Map each chunk through the LLM: adds a ``result`` column.
+    """Map each chunk's ``chunk_text`` through the LLM: every input
+    column, plus a ``result`` column.
 
-    ``concurrency`` bounds simultaneous in-flight calls by
-    repartitioning (each partition runs one client loop). At cluster
-    scale this is the rate limiter the reference lacks.
+    ``concurrency`` is the most calls in flight at once per Spark task
+    (a thread pool per Arrow batch); the input is not repartitioned.
+    At cluster scale this bounds what each task sends to the provider,
+    which the reference does not.
     """
+    if concurrency < 1:
+        raise ValueError(f"concurrency must be at least 1, got {concurrency}")
     system_prompt = prompt + RETURN_LINES_SUFFIX
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            results = [
-                client.generate(system_prompt, chunk) for chunk in pdf["chunk_text"]
-            ]
-            yield pdf.assign(result=results)[
-                ["doc_id", "chunk_id", "chunk_text", "result"]
-            ]
+            texts = pdf["chunk_text"].tolist()
+            yield pdf.assign(
+                result=_generate_all(client, system_prompt, texts, concurrency)
+            )
 
-    src = chunks.select("doc_id", "chunk_id", "chunk_text")
-    if concurrency is not None:
-        src = src.repartition(concurrency)
-    return src.mapInPandas(run, schema=RESULT_SCHEMA)
+    # a new StructType: ``schema.add`` would mutate the input's cached schema
+    schema = StructType([*chunks.schema.fields, StructField("result", StringType())])
+    return chunks.mapInPandas(run, schema=schema)
 
 
 @dataclass
@@ -182,11 +215,12 @@ class RetryingClient:
 
 @dataclass
 class RateLimitedClient:
-    """Token-bucket rate limit decorator: at most ``max_per_second``
-    calls per second per client instance (i.e. per Python worker —
-    cluster-wide rate ≈ max_per_second × concurrency, so set
-    ``llm_map(concurrency=n)`` and this together to hit a provider
-    quota exactly). ``clock``/``sleep`` are injectable for tests."""
+    """Rate limit decorator: at most ``max_per_second`` calls per second
+    per client instance. Each Spark task unpickles its own instance and
+    its threads share it, so the cluster-wide rate is about
+    ``max_per_second`` × running tasks; divide a provider quota by the
+    task count to hit it exactly. ``clock``/``sleep`` are injectable for
+    tests."""
 
     inner: ChatClient
     max_per_second: float = 1.0
@@ -194,16 +228,30 @@ class RateLimitedClient:
     sleep: "object" = None
 
     def __post_init__(self) -> None:
+        self._lock = threading.Lock()
         self._next_allowed = 0.0
+
+    def __getstate__(self) -> dict:
+        # locks do not pickle, and a clock reading means nothing in
+        # another process: an unpickled copy starts a fresh schedule
+        state = self.__dict__.copy()
+        del state["_lock"], state["_next_allowed"]
+        return state
+
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state)
+        self.__post_init__()
 
     def generate(self, system: str, user: str) -> str:
         import time as _time
 
         now_fn = self.clock or _time.monotonic
         do_sleep = self.sleep or _time.sleep
-        now = now_fn()
-        if now < self._next_allowed:
-            do_sleep(self._next_allowed - now)
-            now = self._next_allowed
-        self._next_allowed = now + 1.0 / self.max_per_second
+        # reserve the next slot under the lock, wait for it outside
+        with self._lock:
+            now = now_fn()
+            slot = max(now, self._next_allowed)
+            self._next_allowed = slot + 1.0 / self.max_per_second
+        if slot > now:
+            do_sleep(slot - now)
         return self.inner.generate(system, user)

@@ -35,7 +35,11 @@ from mapreduce_llm_spark.operators.chunker import (
     DEFAULT_MAX_TOKENS_PER_CHUNK,
     chunk_documents,
 )
-from mapreduce_llm_spark.operators.llm_map import ChatClient, llm_map
+from mapreduce_llm_spark.operators.llm_map import (
+    DEFAULT_CONCURRENCY,
+    ChatClient,
+    llm_map,
+)
 
 
 @dataclass(frozen=True)
@@ -99,7 +103,7 @@ def map_reduce_llm(
     model: str = "gpt-5-nano",
     max_tokens_per_chunk: int = DEFAULT_MAX_TOKENS_PER_CHUNK,
     cache_dir: str | None = None,
-    concurrency: int | None = None,
+    concurrency: int = DEFAULT_CONCURRENCY,
     sep: str = "",
     max_cost_usd: float | None = None,
 ) -> DataFrame:
@@ -108,6 +112,8 @@ def map_reduce_llm(
     With ``cache_dir``, completed chunks are served from the
     content-addressed cache and only misses hit the client (the
     reference's resume semantics, strengthened per cache.py).
+    ``concurrency`` is the most LLM calls in flight at once per Spark
+    task (see ``llm_map``); nothing is repartitioned for it.
     With ``max_cost_usd``, the pre-flight token estimate gates
     execution: if the corpus would cost more than the budget for
     ``model``, raise CostCapExceeded before a single call is made."""
@@ -130,9 +136,12 @@ def map_reduce_llm(
     cache = read_cache(spark, cache_dir)
     hits, misses = split_cached(keyed, cache)
 
-    fresh = llm_map(misses, prompt, client, concurrency=concurrency).join(
-        keyed.select("doc_id", "chunk_id", "cache_key"), ["doc_id", "chunk_id"]
-    )
+    fresh = llm_map(
+        misses.select("doc_id", "chunk_id", "chunk_text"),
+        prompt,
+        client,
+        concurrency=concurrency,
+    ).withColumn("cache_key", cache_key_col("chunk_text", prompt, model))
     # persist before both uses (cache append + reduce) so the LLM runs once
     fresh = fresh.persist()
     if fresh.take(1):
