@@ -13,15 +13,18 @@ What is deliberately NOT vendored is the cl100k_base vocabulary DATA:
 artifact. This container has no network and no tiktoken wheel to lift
 it from, so the vocabulary arrives via a file instead: any
 ``.tiktoken``-format file (``<base64-token> <rank>`` per line) is
-loaded with :func:`load_tiktoken_ranks`; point the
-``SPARK_GRAFT_CL100K_PATH`` environment variable at one (or call
-:func:`install_cl100k_from_file`) and every consumer of the token seam
-— counting, chunk boundaries, cost pre-flight — switches from the
-4-chars-per-token heuristic to exact cl100k with no code change.
+loaded with :func:`load_tiktoken_ranks`. Point the
+``SPARK_GRAFT_CL100K_PATH`` environment variable at one and it becomes
+the default counter (when tiktoken is absent), or call
+``functions.tokens.install_cl100k_from_file`` to install it; either
+way every consumer of the token counter — counting, chunk boundaries,
+packing, cost pre-flight — switches from the 4-chars-per-token
+heuristic to exact cl100k with no code change.
 
 The encoder object is picklable (plain dicts + pattern string; the
-compiled regex is rebuilt lazily after unpickling), so it survives
-capture in Spark UDF closures.
+compiled regex is rebuilt lazily after unpickling), so its bound
+``count`` survives capture in Spark UDF closures: that is how an
+installed vocabulary reaches the executors.
 """
 
 from __future__ import annotations

@@ -68,12 +68,16 @@ def split_cached(
     """Partition chunks into (hits-with-result, misses) by cache_key.
 
     Anti-join for misses, inner join for hits; the cache side is tiny
-    relative to the corpus, so Catalyst broadcasts it. Misses come back
+    relative to the corpus, so Catalyst broadcasts it. The cache can
+    hold a key more than once (identical chunks missed in one run are
+    all appended), so the hits join reads it deduplicated by key;
+    otherwise every hit would be multiplied. Misses come back
     without ``cache_key``: the key is a pure function of the chunk text,
     so a caller recomputes it JVM-side after the LLM call (``cache_key_col``)
     instead of shipping it through the Python workers and back.
     """
-    hits = keyed_chunks.join(F.broadcast(cache), "cache_key", "inner")
+    unique = cache.groupBy("cache_key").agg(F.min("result").alias("result"))
+    hits = keyed_chunks.join(F.broadcast(unique), "cache_key", "inner")
     misses = keyed_chunks.join(F.broadcast(cache), "cache_key", "left_anti").drop(
         "cache_key"
     )

@@ -27,24 +27,24 @@ packing is sequential, exactly like the reference's per-file loop.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from mapreduce_llm_spark.functions.tokens import count_tokens_str
+from mapreduce_llm_spark.functions.tokens import get_token_counter, set_token_counter
 
 DEFAULT_MAX_TOKENS_PER_CHUNK = 2000  # reference internal/cli/mapreduce.go:46
 
 
-def _pack_words(line: str, max_tokens: int) -> list[str]:
+def _pack_words(line: str, max_tokens: int, count: Callable[[str], int]) -> list[str]:
     """Word-level greedy packing for a single overlong line
     (reference internal/cli/mapreduce.go:228-254)."""
     chunks: list[str] = []
     current: list[str] = []
     current_tokens = 0
     for word in line.split(" "):
-        t = count_tokens_str(word + " ")
+        t = count(word + " ")
         if current and current_tokens + t > max_tokens:
             chunks.append(" ".join(current))
             current = []
@@ -60,6 +60,7 @@ def chunk_text(text: str, max_tokens: int = DEFAULT_MAX_TOKENS_PER_CHUNK) -> lis
     """Split one document into token-bounded chunks on line boundaries."""
     if not text:
         return []
+    count = get_token_counter()
     chunks: list[str] = []
     current: list[str] = []
     current_tokens = 0
@@ -73,17 +74,17 @@ def chunk_text(text: str, max_tokens: int = DEFAULT_MAX_TOKENS_PER_CHUNK) -> lis
             current_tokens = 0
 
     for line in text.split("\n"):
-        line_tokens = count_tokens_str(line + "\n")
+        line_tokens = count(line + "\n")
         if line_tokens > max_tokens:
             # overlong single line: flush accumulator, word-pack the
             # line; the last word-chunk stays open as the new
             # accumulator (reference mapreduce.go:249-253)
             flush()
-            wchunks = _pack_words(line, max_tokens)
+            wchunks = _pack_words(line, max_tokens, count)
             chunks.extend(wchunks[:-1])
             if wchunks:
                 current = [wchunks[-1]]
-                current_tokens = count_tokens_str(wchunks[-1] + "\n")
+                current_tokens = count(wchunks[-1] + "\n")
             continue
         if current and current_tokens + line_tokens > max_tokens:
             flush()
@@ -111,8 +112,12 @@ def chunk_documents(
     chunked independently wherever it already lives.
     """
     carry = carry_cols or []
+    counter = get_token_counter()
 
     def chunk_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # chunk_text counts through the module global, which a worker
+        # process never inherits from the driver: install the captured one
+        set_token_counter(counter)
         for pdf in batches:
             out: dict[str, list] = {
                 id_col: [], "chunk_id": [], "chunk_text": [], "n_tokens": [],
@@ -124,7 +129,7 @@ def chunk_documents(
                     out[id_col].append(rowd[id_col])
                     out["chunk_id"].append(i)
                     out["chunk_text"].append(chunk)
-                    out["n_tokens"].append(count_tokens_str(chunk))
+                    out["n_tokens"].append(counter(chunk))
                     for c in carry:
                         out[c].append(rowd[c])
             yield pd.DataFrame(out)

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_llm_spark.functions.tokens import count_tokens_str
+from mapreduce_llm_spark.functions.tokens import get_token_counter
 
 DEFAULT_SEQ_BUDGET = 2048
 
@@ -45,6 +45,7 @@ def pack_sequences(
     - deterministic: same doc set → same packing, independent of input
       partitioning (shard = hash(doc_id), packing order = doc_id).
     """
+    counter = get_token_counter()  # the driver's, carried to the workers
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(pdf["_shard"].iloc[0])
@@ -57,7 +58,7 @@ def pack_sequences(
         cur_tokens = 0
         cur_len = 0
         for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-            t = count_tokens_str(text or "")
+            t = counter(text or "")
             if cur_len and cur_tokens + t > budget:
                 seq += 1
                 cur_tokens = 0

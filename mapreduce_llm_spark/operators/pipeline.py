@@ -21,10 +21,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_llm_spark.functions.tokens import (
-    MODEL_COSTS_PER_1M_INPUT_TOKENS,
-    count_tokens_str,
-)
+from mapreduce_llm_spark.functions.tokens import MODEL_COSTS_PER_1M_INPUT_TOKENS
 from mapreduce_llm_spark.operators.cache import (
     append_cache,
     cache_key_col,

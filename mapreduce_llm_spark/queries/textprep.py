@@ -654,13 +654,11 @@ def q_tokenize_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary built in the UDF closure. Rows-only by design: BPE
     merge order is not SQL-expressible.
 
-    Deliberately does NOT go through install_cl100k_from_file: vocab
-    shipping via addFile is app-global and irreversible (ONE install
-    per SparkContext — functions/tokens.py), so a declared query must
-    never mutate the session it runs in; the addFile seam itself is
-    exercised in an isolated app by tests/test_bpe.py. The closure
-    (ranks dict + encoder) pickles to workers per-task instead — the
-    right channel for a per-query vocabulary.
+    Deliberately does NOT go through install_cl100k_from_file, which
+    swaps the process-wide token counter: a declared query must never
+    change what the rest of the session counts with. The ranks dict
+    pickles to workers in the UDF closure instead — the same channel
+    the installed counter itself travels by.
 
     Arrow-batched pandas UDF (never per-row Python); at 100 TB this is
     a narrow map whose cost is pure CPU, exactly how the real cl100k

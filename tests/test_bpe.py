@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import base64
 import pickle
+from pathlib import Path
 
 import pytest
 
@@ -105,7 +106,7 @@ def test_vocab_file_installs_into_token_seam(tmp_path):
         assert T.count_tokens_str("abcd abc") == 4
         assert T.count_tokens_str("abcd abc") != baseline or baseline == 4
     finally:
-        T._BPE = None  # restore heuristic for other tests
+        T.set_token_counter(None)  # restore the default for other tests
 
 
 def test_exact_parity_with_tiktoken_when_available():
@@ -180,31 +181,28 @@ def test_bpe_every_emitted_id_is_a_vocab_token_covering_input(text):
 def test_installed_vocab_reaches_executors(tmp_path):
     """The round-4 advice bug: install_cl100k_from_file used to set a
     driver-global only, so executor-side pandas UDFs silently kept the
-    heuristic. The install now ships the vocab via SparkContext.addFile
-    and workers lazily pick it up from SparkFiles. Shipping is
-    app-global and irreversible (SparkFiles has no remove), so this
-    runs in an ISOLATED Spark application via subprocess — polluting
-    the shared session fixture would flip every later heuristic-based
-    token count."""
+    heuristic. The count UDF now carries the driver's counter to the
+    workers in its closure, so an install — and a second, different
+    install — changes what the executors count. Runs in an ISOLATED
+    Spark application via subprocess so the fresh worker processes
+    start from the default counter."""
     import base64
     import subprocess
     import sys
 
-    vocab = {**TOY, b" ": 8}
+    def write_vocab(path, vocab):
+        path.write_text(
+            "\n".join(
+                base64.b64encode(t).decode() + " " + str(r) for t, r in vocab.items()
+            )
+        )
+
     p = tmp_path / "toy.tiktoken"
-    p.write_text(
-        "\n".join(
-            base64.b64encode(t).decode() + " " + str(r) for t, r in vocab.items()
-        )
-    )
-    # a second, different vocab for the re-install guard leg
+    write_vocab(p, {**TOY, b" ": 8})
+    # a second vocab without the abcd merge: bc merges first, so
+    # "abcd" becomes [a, bc, d] and the text counts 6
     p2 = tmp_path / "toy2.tiktoken"
-    p2.write_text(
-        "\n".join(
-            base64.b64encode(t).decode() + " " + str(r)
-            for t, r in {**TOY, b"  ": 8}.items()
-        )
-    )
+    write_vocab(p2, {**{t: r for t, r in TOY.items() if t != b"abcd"}, b" ": 8})
     script = f"""
 from pyspark.sql import SparkSession, functions as F
 from mapreduce_llm_spark.functions import tokens as T
@@ -213,34 +211,29 @@ spark = (SparkSession.builder.master("local[4]")
          .config("spark.sql.shuffle.partitions", "4")
          .config("spark.ui.enabled", "false")
          .getOrCreate())
-T.install_cl100k_from_file({str(p)!r}, spark=spark)
 df = spark.createDataFrame([("abcd abc",)] * 64, "text string").repartition(8)
-counts = {{r[0] for r in df.select(T.make_count_tokens_udf()(F.col("text"))).collect()}}
+def executor_counts():
+    return {{r[0] for r in df.select(T.make_count_tokens_udf()(F.col("text"))).collect()}}
+T.install_cl100k_from_file({str(p)!r})
 # 4 = exact toy-BPE count; the heuristic would give 2
-assert counts == {{4}}, counts
+assert executor_counts() == {{4}}, executor_counts()
 print("EXECUTOR_VOCAB_OK")
-# re-install with IDENTICAL contents: a no-op, never a second addFile
-# (addFile on the fixed basename with changed bytes fails app-wide)
-T.install_cl100k_from_file({str(p)!r}, spark=spark)
-# re-install with DIFFERENT contents: refused loudly, state untouched
-try:
-    T.install_cl100k_from_file({str(p2)!r}, spark=spark)
-    raise SystemExit("second vocab install should have raised")
-except RuntimeError as e:
-    assert "one install per SparkContext" in str(e), e
-counts = {{r[0] for r in df.select(T.make_count_tokens_udf()(F.col("text"))).collect()}}
-assert counts == {{4}}, counts
-print("REINSTALL_GUARD_OK")
+# a second, different vocab switches the count on the same workers
+T.install_cl100k_from_file({str(p2)!r})
+assert executor_counts() == {{6}}, executor_counts()
+T.set_token_counter(None)
+assert executor_counts() == {{2}}, executor_counts()
+print("REINSTALL_SWITCH_OK")
 """
     r = subprocess.run(
         [sys.executable, "-c", script],
         capture_output=True,
         text=True,
         timeout=240,
-        cwd="/root/repo",
+        cwd=str(Path(__file__).resolve().parents[1]),
     )
     assert "EXECUTOR_VOCAB_OK" in r.stdout, r.stdout + r.stderr
-    assert "REINSTALL_GUARD_OK" in r.stdout, r.stdout + r.stderr
+    assert "REINSTALL_SWITCH_OK" in r.stdout, r.stdout + r.stderr
 
 
 def test_count_memo_matches_encode_len():

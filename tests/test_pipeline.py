@@ -86,6 +86,22 @@ def test_cache_hit_second_run_zero_calls(spark, tmp_path):
     assert out1 == out2
 
 
+def test_resume_with_duplicate_cache_keys_does_not_multiply_rows(spark, tmp_path):
+    """Two identical chunks both miss on the cold run, so the cache
+    holds their key twice; the resumed run must still emit each chunk
+    once, not once per matching cache row."""
+    docs = spark.createDataFrame(
+        [(0, "same line here\nsame line here\nother")], "doc_id long, text string"
+    )
+    cache_dir = str(tmp_path / "cache")
+    kw = dict(max_tokens_per_chunk=3, sep="|", cache_dir=cache_dir)
+    cold = map_reduce_llm(docs, "echo", FakeChatClient(""), **kw).collect()
+    assert cold[0]["result"] == "same line here|same line here|other"
+    assert read_cache(spark, cache_dir).count() == 3  # the duplicate key is stored
+    resumed = map_reduce_llm(docs, "echo", FailingChatClient(), **kw).collect()
+    assert [r["result"] for r in resumed] == [cold[0]["result"]]
+
+
 def test_cache_is_content_addressed_not_positional(spark, tmp_path):
     """Changing the prompt misses the cache — the deliberate divergence
     from the reference's stale positional keying (mapreduce.go:79)."""
